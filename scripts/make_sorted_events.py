@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Builder-side fixture generator (NOT part of the Spark library): a
 TIME-SORTED copy of an events.parquet, for reproducing the sessionize
-layout gate's fast path (tools/ProfileLayoutGate). Sorting by ts makes
+layout gate's fast path (measured by ProfileLayoutGate, a tool removed
+since af949c0). Sorting by ts makes
 the parquet row-group footers near-disjoint, which is exactly the
 metadata evidence `EventStreams.timeClusteredLayout` requires before
 auto-picking the native session_window strategy.

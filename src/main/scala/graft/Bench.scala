@@ -112,20 +112,10 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition-coalescing policy, MEASURED this round (A/B at
-      // sf0.1, calibration-stamped): parallelism-first (the default,
-      // kept) beat size-based coalescing 35.0 s vs 41.7 s on the full
-      // suite — with the size-based run on the FASTER box state
-      // (calib_cpu 230 vs 368 ms). Size-based coalescing collapsed the
-      // CPU-heavy post-shuffle stages (signature kernels, verify joins)
-      // to one task, serializing work 32 cores could split; the
-      // per-task overhead it saves is smaller than the parallelism it
-      // costs at this scale. At fleet scale the guide's 100 MB-1 GB
-      // partition sizing comes from advisoryPartitionSizeInBytes
-      // (deployment conf), not from flipping this policy. Env knob kept
-      // so the A/B stays reproducible.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+    // AQE coalescing stays on Spark's parallelism-first default: an A/B at
+    // sf0.1 measured it against size-based coalescing at 35.0 s vs 41.7 s
+    // for the full suite (size-based collapsed CPU-heavy post-shuffle
+    // stages to one task).
     // committer v2 + codegen cache sizing moved to the shared library
     // tuning (graft.engine.SessionTuning) so Bench, Verify and the HTTP
     // server run the same write path — a conf that lived only here

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * state), never the DISTINCT (user, period) pair relation the naive
   * shape shuffles (513M pairs at 1.28B events, the measured wall of
   * [[graft.streaming.EventStreams.retention]]'s previous form —
-  * tools/ProfileRetentionStages).
+  * ProfileRetentionStages; tool removed, see af949c0).
   *
   * Fold semantics: the buffer mask is always RELATIVE to the buffer's
   * current min. Updating with an earlier period (or merging a partial

@@ -96,14 +96,15 @@ object ArtifactLock {
     * writers used to round-trip such payloads (sketch bytes, centroid
     * lists) through a 1-row/1-file parquet WRITE ACTION, paying the
     * full fixed per-action cost (~300 ms of planning + stage scheduling
-    * + commit at ANY size — ProfileWriteOverhead, round 20) to move
-    * bytes the driver already held; the paired load paid a collect
-    * action to get them back. The payloads are driver-scale by
-    * construction (a serialized BloomFilter, nCells×dim doubles), so a
-    * plain filesystem write is the honest cost. Readers are safe the
-    * same way parquet was: the file is complete and renamed into place
-    * BEFORE the manifest points at its generation dir, and loads of a
-    * pruned generation heal through [[retryingLoad]]. */
+    * + commit at ANY size — ProfileWriteOverhead, round 20; tool
+    * removed, see af949c0) to move bytes the driver already held; the
+    * paired load paid a collect action to get them back. The payloads
+    * are driver-scale by construction (a serialized BloomFilter,
+    * nCells×dim doubles), so a plain filesystem write is the honest
+    * cost. Readers are safe the same way parquet was: the file is
+    * complete and renamed into place BEFORE the manifest points at its
+    * generation dir, and loads of a pruned generation heal through
+    * [[retryingLoad]]. */
   private[graft] def writeBytesFile(spark: org.apache.spark.sql.SparkSession,
                                     dir: String, name: String,
                                     bytes: Array[Byte]): Unit = {
@@ -125,25 +126,20 @@ object ArtifactLock {
     }
   }
 
-  /** Read `<file>` fully into driver memory (None when absent). The
-    * read side of [[writeBytesFile]] — no Spark job. A prune racing the
-    * exists/open window surfaces as FileNotFoundException, which
-    * [[retryingLoad]]'s classifier already treats as a maintenance race
-    * and heals with a fresh manifest resolve. */
+  /** Read `<file>` fully into driver memory — the read side of
+    * [[writeBytesFile]], no Spark job. Any read failure, a missing file
+    * included, surfaces as IllegalArgumentException `"$what: <cause>"`
+    * with the IOException attached: a prune racing the read bottoms out
+    * in FileNotFoundException, which [[retryingLoad]]'s classifier walks
+    * the cause chain to find and heals with a fresh manifest resolve. */
   private[graft] def readBytesFile(spark: org.apache.spark.sql.SparkSession,
-                                   file: String): Option[Array[Byte]] = {
+                                   file: String, what: String): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](1 << 16)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        Some(bos.toByteArray)
-      } finally in.close()
+    try {
+      val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+      try in.readAllBytes() finally in.close()
+    } catch { case e: java.io.IOException =>
+      throw new IllegalArgumentException(s"$what: ${e.getMessage}", e)
     }
   }
 
@@ -151,32 +147,35 @@ object ArtifactLock {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Generation-suffixed data-relation directory name: generation 0 is
-    * the bare legacy name (pre-generation artifacts load unchanged),
-    * generation N > 0 is `<base>-N`. Mutations write the NEXT
-    * generation's dirs and repoint the (atomically published) manifest
-    * (`data_gen`) — an unlocked reader that resolved the old manifest
-    * keeps reading the old generation's files, which stay on disk until
-    * the generation after next prunes them. In-place Overwrite/swap
-    * gave racing readers missing dirs and vanished footers
-    * (ArtifactRaceSpec). */
+    * the bare name, generation N > 0 is `<base>-N`. Mutations write the
+    * NEXT generation's dirs and repoint the (atomically published)
+    * manifest (`data_gen`) — an unlocked reader that resolved the old
+    * manifest keeps reading the old generation's files, which stay on
+    * disk until the generation after next prunes them. In-place
+    * Overwrite/swap gave racing readers missing dirs and vanished
+    * footers (ArtifactRaceSpec). */
   private[graft] def genDirName(base: String, gen: Long): String =
     if (gen <= 0L) base else s"$base-$gen"
 
+  private def readManifestText(fs: org.apache.hadoop.fs.FileSystem,
+                               mPath: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(mPath)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
   /** The existing artifact's data generation, when `path` already holds
-    * one: None for a fresh path; an unreadable/legacy manifest reads as
-    * generation 0 (so a rebuild over it writes generation 1 and never
-    * truncates dirs a reader may hold open). */
+    * one: None for a fresh path; an unreadable or foreign manifest
+    * reads as generation 0 (so a rebuild over it writes generation 1 and
+    * never truncates dirs a reader may hold open). The lenient WRITER
+    * side — loads go through the strict [[readManifest]]. */
   private[graft] def currentDataGen(spark: org.apache.spark.sql.SparkSession,
                                     path: String): Option[Long] = {
     val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
     val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(mPath)) None
     else try {
-      val in = fs.open(mPath)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      graft.engine.QueryJson.parse(text) match {
+      graft.engine.QueryJson.parse(readManifestText(fs, mPath)) match {
         case m: scala.collection.Map[String @unchecked, Any @unchecked] =>
           Some(m.get("data_gen") match {
             case Some(l: Long) if l >= 0 => l
@@ -185,6 +184,59 @@ object ArtifactLock {
         case _ => Some(0L)
       }
     } catch { case _: Exception => Some(0L) }
+  }
+
+  /** One artifact family's manifest identity: the `kind` tag its
+    * manifests carry, the short label its errors use ("malformed bloom
+    * manifest") and the noun phrase a foreign-kind error names ("is not
+    * a bloom exclusion"). */
+  final case class ArtifactKind(tag: String, label: String, noun: String)
+
+  /** A validated manifest: its fields, and the data generation
+    * (`data_gen`, 0 when absent) whose directories the load reads. */
+  final case class Manifest(fields: scala.collection.Map[String, Any],
+                            dataGen: Long) {
+    def get(key: String): Option[Any] = fields.get(key)
+  }
+
+  /** The one manifest reader every artifact load goes through. Fails fast
+    * with IllegalArgumentException on a missing, malformed or
+    * foreign-kind manifest; on a format version other than `version` (a
+    * stale artifact names both formats and asks for a rebuild — never a
+    * misleading "corrupt"); and on a `data_gen` that is present but not
+    * a non-negative integer (corrupt — it never reads as generation 0,
+    * which would point a load at a different generation's files). */
+  def readManifest(spark: org.apache.spark.sql.SparkSession, path: String,
+                   kind: ArtifactKind, version: Int): Manifest = {
+    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
+    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(mPath))
+      throw new IllegalArgumentException(
+        s"no ${kind.label} index at $path (missing manifest.json)")
+    val parsed =
+      try graft.engine.QueryJson.parse(readManifestText(fs, mPath))
+      catch { case e: Exception => throw new IllegalArgumentException(
+        s"malformed ${kind.label} manifest at $path: ${e.getMessage}", e) }
+    val fields = parsed match {
+      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
+      case _ => throw new IllegalArgumentException(
+        s"malformed ${kind.label} manifest at $path")
+    }
+    if (!fields.get("kind").contains(kind.tag))
+      throw new IllegalArgumentException(
+        s"artifact at $path is not ${kind.noun} (kind=${fields.get("kind")})")
+    if (!fields.get("version").contains(version.toLong))
+      throw new IllegalArgumentException(
+        s"unsupported ${kind.label} artifact version at $path: artifact " +
+          s"format ${fields.getOrElse("version", "none")}, this binary reads " +
+          s"$version — rebuild the artifact")
+    val dataGen = fields.get("data_gen") match {
+      case None => 0L
+      case Some(l: Long) if l >= 0 => l
+      case Some(other) => throw new IllegalArgumentException(
+        s"${kind.label} artifact at $path is corrupt: bad data_gen $other")
+    }
+    Manifest(fields, dataGen)
   }
 
   /** How many PRIOR generations a prune keeps alive for unlocked

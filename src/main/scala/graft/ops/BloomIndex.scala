@@ -18,9 +18,9 @@ import scala.collection.mutable
   *     OR-merge makes the build order-independent, so the bytes are
   *     deterministic for a given list + parameters). Written and read
   *     via the filesystem API — the bytes are driver-held on both
-  *     sides, so no Spark action is spent moving them (round-21 trim);
-  *     artifacts from before the trim stored a one-row parquet relation
-  *     `(bloom BINARY)` in the same dir, which loads unchanged.
+  *     sides, so no Spark action is spent moving them. Format-1
+  *     artifacts (a one-row parquet sketch) fail to load with a version
+  *     mismatch; rebuild them.
   *   - `<path>/manifest.json` — format version + build parameters
   *     (n_items estimate, fpp, byte length as an integrity check), the
   *     id column's NAME and TYPE (a sketch probed through a different
@@ -60,7 +60,12 @@ object BloomIndex {
   final class SketchOutgrownException(message: String)
     extends IllegalArgumentException(message)
 
-  val FormatVersion = 1
+  /** 2: the sketch is a raw `sketch.bin`; format 1 stored a one-row
+    * parquet relation and no longer loads. */
+  val FormatVersion = 2
+
+  private val Kind = ArtifactLock.ArtifactKind(
+    "bloom_exclusion", "bloom", "a bloom exclusion")
 
   /** Order-independent content fingerprint of `df`'s id list: the exact
     * decimal sum of xxhash64 over the raw (non-distinct) column — one
@@ -178,15 +183,14 @@ object BloomIndex {
     // The sketch bytes are DRIVER-HELD, so they go down as a raw file
     // ([[ArtifactLock.writeBytesFile]]) instead of the former 1-row
     // parquet write ACTION — one fewer ~300 ms fixed-cost Spark job per
-    // save at any scale (round-21 trim; loads read pre-trim parquet
-    // sketches unchanged).
+    // save at any scale.
     val newGen: Long =
       ArtifactLock.currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
     ArtifactLock.writeBytesFile(spark,
       s"$path/${ArtifactLock.genDirName("bloom", newGen)}", "sketch.bin", bytes)
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "bloom_exclusion",
+      "kind" -> Kind.tag,
       "fpp" -> fpp,
       "data_gen" -> newGen,
       "n_bytes" -> bytes.length.toLong) ++
@@ -213,8 +217,9 @@ object BloomIndex {
     loadWithMeta(spark, path).bytes
 
   /** Load a persisted sketch with its manifest metadata. Every failure
-    * mode — missing, foreign, corrupt, unparsable manifest, missing
-    * sketch parquet — surfaces as IllegalArgumentException (the
+    * mode — missing, foreign, stale-format or corrupt artifact,
+    * unparsable manifest, missing sketch file — surfaces as
+    * IllegalArgumentException (the
     * documented fail-fast contract; raw parse/read exceptions are
     * wrapped so direct-API consumers can catch one type). A load racing
     * concurrent saves is retried bounded ([[ArtifactLock.retryingLoad]]
@@ -223,53 +228,11 @@ object BloomIndex {
     ArtifactLock.retryingLoad(loadWithMetaOnce(spark, path))
 
   private def loadWithMetaOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no bloom index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed bloom manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed bloom manifest at $path")
-    }
-    if (!manifest.get("kind").contains("bloom_exclusion"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a bloom exclusion (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported bloom index version ${manifest.get("version")} at $path")
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
-    val genDir = s"$path/${ArtifactLock.genDirName("bloom", dataGen)}"
-    // raw sketch file first (current writers — a plain driver read, no
-    // Spark job); artifacts written before the round-21 trim fall back
-    // to the 1-row parquet collect
-    val bytes = ArtifactLock.readBytesFile(spark, s"$genDir/sketch.bin")
-      .getOrElse {
-        val rows =
-          try spark.read.parquet(genDir).collect()
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            // cause attached: retryingLoad's classifier walks the chain to
-            // tell a maintenance race (PATH_NOT_FOUND) from real corruption
-            throw new IllegalArgumentException(
-              s"bloom index at $path is corrupt: unreadable sketch: ${e.getMessage}", e) }
-        if (rows.length != 1)
-          throw new IllegalArgumentException(
-            s"bloom index at $path is corrupt: expected one sketch row, got ${rows.length}")
-        rows.head.getAs[Array[Byte]]("bloom")
-      }
-    if (bytes == null || !manifest.get("n_bytes").contains(bytes.length.toLong))
+    val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
+    val bytes = ArtifactLock.readBytesFile(spark,
+      s"$path/${ArtifactLock.genDirName("bloom", manifest.dataGen)}/sketch.bin",
+      s"bloom index at $path is corrupt: unreadable sketch")
+    if (!manifest.get("n_bytes").contains(bytes.length.toLong))
       throw new IllegalArgumentException(
         s"bloom index at $path is corrupt: byte length disagrees with manifest")
     Artifact(bytes,
@@ -399,25 +362,18 @@ object BloomIndex {
     // the added side's fingerprint/counts ride the added-side sketch
     // build as observed metrics (the buildAndSave discipline): one scan
     // of the delta instead of a fingerprint aggregation PLUS a sketch
-    // aggregation (round-21 trim). The sketch is built unconditionally
-    // — an empty or all-null delta builds an empty filter that is
-    // simply never merged, at the same one-action cost the standalone
-    // fingerprint pass used to spend.
+    // aggregation. The sketch is built unconditionally — an empty or
+    // all-null delta builds an empty filter whose merge is a no-op, at
+    // the same one-action cost the standalone fingerprint pass used to
+    // spend.
     val addObs = org.apache.spark.sql.Observation()
     val observedAdded = added.observe(addObs,
       sum(when(col(addedIdCol).isNotNull, xxhash64(col(addedIdCol)))
         .otherwise(lit(0L)).cast("decimal(38,0)")).as("fp"),
       count(lit(1)).as("n"),
       count(when(col(addedIdCol).isNull, lit(1))).as("n_null"))
-    // an added side with zero non-null ids makes Spark's bloom aggregate
-    // return a null buffer, which stat.bloomFilter NPEs decoding (the
-    // aggregation JOB itself completed — the observed metrics are
-    // posted). That is exactly the case whose sketch is never merged
-    // (nAdd - nAddNull == 0 below), so an absent sketch is the honest
-    // result; the removal-only update in the spec pins this path.
-    val addedSketch: Option[Array[Byte]] =
-      try Some(Dedup.buildBloomSized(observedAdded, addedIdCol, nItemsBuilt, fpp))
-      catch { case _: NullPointerException => None }
+    val addedSketch =
+      Dedup.buildBloomSized(observedAdded, addedIdCol, nItemsBuilt, fpp)
     val mAdd = addObs.get
     val (addFp, nAdd, nAddNull) = (Observed.decimalSum(mAdd, "fp").toString,
       Observed.long(mAdd, "n"), Observed.long(mAdd, "n_null"))
@@ -446,11 +402,8 @@ object BloomIndex {
         f"$what has outgrown its sketch: estimated false-positive rate " +
           f"$est%.2g at ${newInserted} inserted ids exceeds $maxFppFactor%.1f× " +
           f"the built fpp=$fpp%.2g — rebuild the artifact at the new scale")
-    if (nAdd - nAddNull > 0L)
-      base.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(addedSketch.getOrElse(
-          throw new IllegalStateException(
-            s"$what: added-side sketch missing for ${nAdd - nAddNull} ids")))))
+    base.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(addedSketch)))
     val bos = new java.io.ByteArrayOutputStream()
     base.writeTo(bos)
     save(spark, path, bos.toByteArray, fpp = fpp,

@@ -22,7 +22,7 @@ import scala.collection.mutable
   *     REFRESH exact: removing a document decrements its grams and only
   *     a count reaching zero leaves the relation — a gram shared by a
   *     surviving document keeps matching.
-  *   - `<path>/bloom[-g]/` — serialized `BloomFilter` over the gram
+  *   - `<path>/bloom[-g]/sketch.bin` — serialized `BloomFilter` over the gram
   *     hashes, the map-side pre-filter: the train side's exploded
   *     (doc, gram) relation is probed inside codegen and only
   *     probe-positive grams (true matches + fpp of the rest) reach the
@@ -56,7 +56,12 @@ import scala.collection.mutable
   */
 object DecontIndex {
 
-  val FormatVersion = 1
+  /** 2: the sketch is a raw `sketch.bin`; format 1 stored a one-row
+    * parquet relation and no longer loads. */
+  val FormatVersion = 2
+
+  private val Kind = ArtifactLock.ArtifactKind(
+    "decont_ngram", "decontamination", "a decontamination index")
 
   /** A loaded artifact: the distinct eval-gram relation (lazy over the
     * pinned generation — gram-set-sized), the sketch bytes, and the
@@ -99,8 +104,8 @@ object DecontIndex {
     * back state it already holds. The write path still round-trips the
     * big relation (the sketch aggregates over the just-written grams
     * parquet), and the fresh-reader fail-fast contract stays covered by
-    * every real load ([[load]]'s one sketch-readback collect — e.g.
-    * [[update]] starts with one). Caller holds the write lock.
+    * every real load ([[load]]'s sketch-file read — e.g. [[update]]
+    * starts with one). Caller holds the write lock.
     *
     * `abortIf` runs between the grams write and any publication: when
     * it throws, the just-written (never-referenced) generation dir is
@@ -140,12 +145,11 @@ object DecontIndex {
     // the sketch bytes are driver-held: a raw-file publish
     // ([[ArtifactLock.writeBytesFile]]) replaces the former 1-row
     // parquet write ACTION — one fewer fixed-cost Spark job per save
-    // (round-21 trim; pre-trim parquet sketches still load)
     ArtifactLock.writeBytesFile(spark,
       s"$path/${ArtifactLock.genDirName("bloom", newGen)}", "sketch.bin", bytes)
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "decont_ngram",
+      "kind" -> Kind.tag,
       "n" -> n.toLong,
       "fpp" -> fpp,
       "data_gen" -> newGen,
@@ -179,32 +183,8 @@ object DecontIndex {
     ArtifactLock.retryingLoad(use(loadOnce(spark, path)))
 
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no decontamination index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed decontamination manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed decontamination manifest at $path")
-    }
-    if (!manifest.get("kind").contains("decont_ngram"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a decontamination index " +
-          s"(kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported decontamination index version " +
-          s"${manifest.get("version")} at $path")
+    val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
+    val dataGen = manifest.dataGen
     val n = manifest.get("n") match {
       case Some(l: Long) if l > 0 => l.toInt
       case other => throw new IllegalArgumentException(
@@ -214,35 +194,15 @@ object DecontIndex {
       case Some(d: Double) => d
       case _ => 0.01
     }
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
     val nGrams = manifest.get("n_grams") match {
       case Some(l: Long) if l >= 0 => l
       case other => throw new IllegalArgumentException(
         s"decontamination index at $path records no gram count (got $other)")
     }
-    val bloomGenDir = s"$path/${ArtifactLock.genDirName("bloom", dataGen)}"
-    // raw sketch file first (current writers — no Spark job); pre-trim
-    // artifacts fall back to the 1-row parquet collect
-    val bytes = ArtifactLock.readBytesFile(spark, s"$bloomGenDir/sketch.bin")
-      .getOrElse {
-        val rows =
-          try spark.read.parquet(bloomGenDir).collect()
-          catch { case e: org.apache.spark.sql.AnalysisException =>
-            // cause attached: retryingLoad's classifier walks the chain to
-            // tell a maintenance race (PATH_NOT_FOUND) from real corruption
-            throw new IllegalArgumentException(
-              s"decontamination index at $path is corrupt: unreadable " +
-                s"sketch: ${e.getMessage}", e) }
-        if (rows.length != 1)
-          throw new IllegalArgumentException(
-            s"decontamination index at $path is corrupt: expected one sketch " +
-              s"row, got ${rows.length}")
-        rows.head.getAs[Array[Byte]]("bloom")
-      }
-    if (bytes == null || !manifest.get("n_bytes").contains(bytes.length.toLong))
+    val bytes = ArtifactLock.readBytesFile(spark,
+      s"$path/${ArtifactLock.genDirName("bloom", dataGen)}/sketch.bin",
+      s"decontamination index at $path is corrupt: unreadable sketch")
+    if (!manifest.get("n_bytes").contains(bytes.length.toLong))
       throw new IllegalArgumentException(
         s"decontamination index at $path is corrupt: sketch byte length " +
           "disagrees with manifest")

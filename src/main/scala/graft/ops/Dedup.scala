@@ -1179,14 +1179,30 @@ object Dedup {
 
   /** [[buildBloom]] at an EXPLICIT sizing — the incremental-update path,
     * where the added rows must hash into a bit array shaped exactly like
-    * the base artifact's. */
+    * the base artifact's. Runs the aggregate `stat.bloomFilter` runs, but
+    * handles its null result: a list with no non-null id (empty or
+    * all-null) inserts nothing, and Spark returns null instead of an
+    * empty filter (stat.bloomFilter then throws decoding it). That case
+    * yields the empty filter at the aggregate's own shape — same
+    * `maxNumItems`/`maxNumBits` session caps — so it probes all-negative
+    * and merges into a same-sizing build as a no-op. */
   private[graft] def buildBloomSized(exclude: DataFrame, excludeIdCol: String,
                                      nItems: Long, fpp: Double): Array[Byte] = {
     requireIntegralId(exclude, excludeIdCol, "exclude id")
-    val bf = exclude.stat.bloomFilter(excludeIdCol, nItems, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    bos.toByteArray
+    val numBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(nItems, fpp)
+    val row = exclude.select(org.apache.spark.sql.GraftSqlShims.bloomFilterAgg(
+      col(excludeIdCol), nItems, numBits)).head()
+    if (!row.isNullAt(0)) row.getAs[Array[Byte]](0)
+    else {
+      import org.apache.spark.sql.internal.SQLConf
+      val conf = exclude.sparkSession.sessionState.conf
+      val empty = org.apache.spark.util.sketch.BloomFilter.create(
+        math.min(nItems, conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS)),
+        math.min(numBits, conf.getConf(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS)))
+      val bos = new java.io.ByteArrayOutputStream()
+      empty.writeTo(bos)
+      bos.toByteArray
+    }
   }
 
   /** The Bloom exclusion's ids must be integral on BOTH sides: the

@@ -19,10 +19,9 @@ import scala.collection.mutable
   *     round-trips, so a loaded quantizer reproduces assignments
   *     BIT-FOR-BIT (pinned in OpsSpec). Written and read via the
   *     filesystem API — the list is driver-held on both sides, so no
-  *     Spark action is spent moving it (round-21 trim); artifacts from
-  *     before the trim stored a one-file parquet relation
-  *     `(cell INT, centroid ARRAY<DOUBLE>)` in the same dir, which
-  *     loads unchanged.
+  *     Spark action is spent moving it. Format-1 artifacts (a parquet
+  *     `(cell, centroid)` relation) fail to load with a version
+  *     mismatch; rebuild them.
   *   - `<path>/manifest.json` — format version + build parameters
   *     (n_cells requested, n_centroids actually built, dim,
   *     kmeans_iters), written via the Hadoop FileSystem API so the path
@@ -42,7 +41,12 @@ import scala.collection.mutable
   */
 object IvfIndex {
 
-  val FormatVersion = 1
+  /** 2: the centroids are a raw `centroids.bin`; format 1 stored a
+    * parquet relation and no longer loads. */
+  val FormatVersion = 2
+
+  private val Kind = ArtifactLock.ArtifactKind(
+    "ivf_coarse_quantizer", "IVF", "an IVF quantizer")
 
   /** Build the quantizer for `corpus` (through the session cache — a
     * warm build is free) and persist it at `path`. Returns the
@@ -80,7 +84,7 @@ object IvfIndex {
     * unchanged and nothing is rewritten (the identity x79b anchors
     * through DuckDB). Seeding from an `iters = 0` artifact on an
     * unchanged corpus reproduces `buildQuantizer(..., iters)`
-    * BIT-FOR-BIT — the parquet round-trip is IEEE-exact and both
+    * BIT-FOR-BIT — the raw-file round-trip is IEEE-exact and both
     * paths normalize the seed the same way (also pinned). */
   def refine(spark: SparkSession, path: String, corpus: DataFrame,
              vecCol: String, iters: Int): Seq[Seq[Double]] =
@@ -89,7 +93,7 @@ object IvfIndex {
     val centroids = load(spark, path)
     if (iters == 0) centroids
     else {
-      val manifest = readManifest(spark, path)
+      val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
       val prevIters = manifest.get("kmeans_iters") match {
         case Some(l: Long) if l >= 0 => l
         case _ => 0L
@@ -116,8 +120,7 @@ object IvfIndex {
     // file (count, dim, then raw IEEE754 bits — bit-exact round-trip,
     // same exactness guarantee the parquet doubles gave) instead of the
     // former one-file parquet write ACTION: one fewer ~300 ms
-    // fixed-cost Spark job per save at any scale (round-21 trim;
-    // pre-trim parquet centroid relations still load). Generationed
+    // fixed-cost Spark job per save at any scale. Generationed
     // (the vocab pattern): write the NEXT generation's dir, repoint the
     // manifest atomically, prune older — an in-place Overwrite (the
     // refine path rewrites this relation) raced unlocked readers
@@ -128,7 +131,7 @@ object IvfIndex {
       "centroids.bin", encodeCentroids(centroids))
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "ivf_coarse_quantizer",
+      "kind" -> Kind.tag,
       "data_gen" -> newGen,
       "n_cells" -> nCells.toLong,
       "n_centroids" -> centroids.length.toLong,
@@ -141,33 +144,10 @@ object IvfIndex {
     ArtifactLock.pruneGenerations(spark, path, Seq("centroids"), newGen)
   }
 
-  private def readManifest(spark: SparkSession,
-                           path: String): scala.collection.Map[String, Any] = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(s"no IVF index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val manifest = graft.engine.QueryJson.parse(text) match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(s"malformed IVF manifest at $path")
-    }
-    if (!manifest.get("kind").contains("ivf_coarse_quantizer"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not an IVF quantizer (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported IVF index version ${manifest.get("version")} at $path")
-    manifest
-  }
-
   /** Load a persisted quantizer. Fails fast (IllegalArgumentException)
     * on a missing/foreign/corrupt artifact rather than returning a
     * half-index. A load racing concurrent saves is retried bounded
-    * ([[ArtifactLock.retryingLoad]]): manifest-read → parquet-read is
+    * ([[ArtifactLock.retryingLoad]]): manifest-read → centroid-read is
     * not atomic, so a reader lagging several saves can still find its
     * resolved generation pruned — the retry re-resolves the manifest
     * (fresh generation, fresh file listing) and reads again. */
@@ -203,28 +183,17 @@ object IvfIndex {
   }
 
   private def loadOnce(spark: SparkSession, path: String): Seq[Seq[Double]] = {
-    val manifest = readManifest(spark, path)
-    val dataGen: Long = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
-    val genDir = s"$path/${ArtifactLock.genDirName("centroids", dataGen)}"
-    // raw centroid file first (current writers — a plain driver read, no
-    // Spark job); pre-trim artifacts fall back to the parquet collect
-    val centroids = ArtifactLock.readBytesFile(spark, s"$genDir/centroids.bin")
-      .map(decodeCentroids(path, _))
-      .getOrElse(spark.read.parquet(genDir)
-        .orderBy("cell")
-        .collect()
-        .map(r => r.getAs[scala.collection.Seq[Double]]("centroid").toSeq)
-        .toSeq)
+    val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
+    val centroids = decodeCentroids(path, ArtifactLock.readBytesFile(spark,
+      s"$path/${ArtifactLock.genDirName("centroids", manifest.dataGen)}/centroids.bin",
+      s"IVF index at $path is corrupt: unreadable centroids"))
     val expected = manifest.get("n_centroids")
     if (!expected.contains(centroids.length.toLong))
       throw new IllegalArgumentException(
         s"IVF index at $path is corrupt: manifest claims $expected centroids, " +
-          s"parquet holds ${centroids.length}")
-    if (centroids.isEmpty || centroids.map(_.length).distinct.size != 1 ||
-        !manifest.get("dim").contains(centroids.head.length.toLong))
+          s"centroids.bin holds ${centroids.length}")
+    // decodeCentroids guarantees a non-empty, one-dimensionality list
+    if (!manifest.get("dim").contains(centroids.head.length.toLong))
       throw new IllegalArgumentException(
         s"IVF index at $path is corrupt: centroid dimensionality disagrees with manifest")
     centroids

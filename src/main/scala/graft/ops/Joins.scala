@@ -284,7 +284,8 @@ object Joins {
     *      `coalesce(local, carryIn)` — AQE broadcasts the carry when it
     *      is small.
     *
-    * Regime note (measured, tools/ProfileAsofStages at 1.28B events):
+    * Regime note (measured at 1.28B events by ProfileAsofStages, a tool
+    * removed since af949c0):
     * the boundary relation is granule-BOUNDED per key, so on SKEWED
     * corpora — the regime this decomposition exists for — it is small.
     * On provably-UNIFORM keys it approaches one row per input row

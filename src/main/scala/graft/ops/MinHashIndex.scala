@@ -64,6 +64,9 @@ object MinHashIndex {
 
   val FormatVersion = 1
 
+  private val Kind = ArtifactLock.ArtifactKind(
+    "minhash_signatures", "minhash", "a minhash signature index")
+
   /** Loaded artifact: the LAZY signature relation plus the manifest
     * parameters. numHashes and shingleSize are mandatory (without them
     * the signatures are uninterpretable); identity metadata is optional
@@ -134,7 +137,7 @@ object MinHashIndex {
     val (fp, n) = (Observed.decimalSum(m, "fp").toString, Observed.long(m, "n"))
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "minhash_signatures",
+      "kind" -> Kind.tag,
       "num_hashes" -> numHashes.toLong,
       "shingle_size" -> shingleSize.toLong,
       "id_col" -> idCol,
@@ -217,31 +220,7 @@ object MinHashIndex {
     ArtifactLock.retryingLoad(use(loadOnce(spark, path)))
 
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no minhash index at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed minhash manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed minhash manifest at $path")
-    }
-    if (!manifest.get("kind").contains("minhash_signatures"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a minhash signature index " +
-          s"(kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported minhash index version ${manifest.get("version")} at $path")
+    val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
     val numHashes = manifest.get("num_hashes") match {
       case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
       case other => throw new IllegalArgumentException(
@@ -530,7 +509,7 @@ object MinHashIndex {
       }
       val manifest = mutable.LinkedHashMap[String, Any](
         "version" -> FormatVersion,
-        "kind" -> "minhash_signatures",
+        "kind" -> Kind.tag,
         "num_hashes" -> art.numHashes.toLong,
         "shingle_size" -> art.shingleSize.toLong,
         "id_col" -> idCol,

@@ -44,7 +44,12 @@ import scala.collection.mutable
   */
 object VocabIndex {
 
-  val FormatVersion = 1
+  /** 2: capacity-built artifacts store only the summary (the
+    * vocabulary derives from it); format-1 artifacts no longer load. */
+  val FormatVersion = 2
+
+  private val Kind = ArtifactLock.ArtifactKind(
+    "vocabulary", "vocabulary", "a vocabulary")
 
   /** Default registry bound for [[update]]'s auto-compaction: with K=16
     * the newest 16 ingests stay individually removable while the
@@ -125,36 +130,10 @@ object VocabIndex {
   private def obsLong(m: Map[String, Any], key: String): Long =
     Observed.long(m, key)
 
-  /** Generation-suffixed data-relation directory name: generation 0 is
-    * the bare legacy name (pre-generation artifacts load unchanged),
-    * generation N > 0 is `<base>-N`. Every mutation writes the NEXT
-    * generation's dirs and repoints the (atomically published) manifest
-    * — an unlocked reader that resolved the old manifest keeps reading
-    * the old generation's files, which stay on disk until the
-    * generation after next prunes them. The previous in-place
-    * delete+rename swap gave racing readers missing dirs and vanished
-    * footers (hammered in ArtifactRaceSpec). */
-  private def genDir(base: String, gen: Long): String =
-    ArtifactLock.genDirName(base, gen)
-
-  /** The existing artifact's data generation, when `path` already holds
-    * one: None for a fresh path; an unreadable/legacy manifest reads as
-    * generation 0 (so a rebuild over it writes generation 1 and never
-    * truncates dirs a reader may hold open). */
-  private def currentDataGen(spark: SparkSession, path: String): Option[Long] =
-    ArtifactLock.currentDataGen(spark, path)
-
   private def pruneDataGenerations(spark: SparkSession, path: String,
                                    newGen: Long): Unit = {
     ArtifactLock.pruneGenerations(spark, path,
       Seq("vocabulary", "summary"), newGen)
-    // legacy staging leftovers from the pre-generation swap form
-    try {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      Seq("summary.next", "vocabulary.next").foreach(n =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, n), true))
-    } catch { case _: Exception => () }
   }
 
   def buildAndSave(corpus: DataFrame, textCol: String, k: Int,
@@ -165,7 +144,8 @@ object VocabIndex {
     val spark = corpus.sparkSession
     // a rebuild over an existing artifact writes the NEXT generation's
     // data dirs (never truncating what a racing reader resolved)
-    val newGen: Long = currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
+    val newGen: Long =
+      ArtifactLock.currentDataGen(spark, path).map(_ + 1L).getOrElse(0L)
     val inObs = org.apache.spark.sql.Observation()
     val obsExprs = corpusObs(textCol)
     val observedCorpus = corpus.observe(inObs, obsExprs.head, obsExprs.tail: _*)
@@ -221,14 +201,14 @@ object VocabIndex {
         top.withColumn("rank", row_number().over(w))
           .observe(vObs, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite)
-          .parquet(s"$path/${genDir("vocabulary", newGen)}")
+          .parquet(s"$path/${ArtifactLock.genDirName("vocabulary", newGen)}")
         (Seq.empty, obsLong(vObs.get, "n"))
     }
     val inM = inObs.get
     val (fp, nDocs) = (fpOf(inM).toString, obsLong(inM, "n"))
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "vocabulary",
+      "kind" -> Kind.tag,
       "k" -> k.toLong,
       "text_col" -> textCol,
       "n_docs" -> nDocs,
@@ -367,7 +347,7 @@ object VocabIndex {
     }
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "vocabulary",
+      "kind" -> Kind.tag,
       "k" -> art.k.toLong,
       "text_col" -> textCol,
       "n_docs" -> (oldN + nAdded),
@@ -456,7 +436,7 @@ object VocabIndex {
       math.max(cap, art.k), art.k, baseTheta = totTheta, newGen = newGen)
     val manifest = mutable.LinkedHashMap[String, Any](
       "version" -> FormatVersion,
-      "kind" -> "vocabulary",
+      "kind" -> Kind.tag,
       "k" -> art.k.toLong,
       "text_col" -> art.textCol.getOrElse("text"),
       "n_docs" -> survivors.map(_.nDocs).sum,
@@ -589,13 +569,8 @@ object VocabIndex {
     // every OTHER manifest entry is untouched state — re-read the live
     // manifest and replace only the registry (compaction must not
     // reconstruct totals it did not recompute)
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val manifest = graft.engine.QueryJson.parse(text)
-      .asInstanceOf[mutable.LinkedHashMap[String, Any]]
+    val manifest = mutable.LinkedHashMap[String, Any]() ++=
+      ArtifactLock.readManifest(spark, path, Kind, FormatVersion).fields
     manifest.put("slabs", (epoch +: kept).map(slabEntry).toList)
     writeManifest(spark, path, graft.engine.QueryJson.write(manifest))
     // victim dirs go LAST, after the manifest stops referencing them: a
@@ -638,7 +613,8 @@ object VocabIndex {
                            norm: DataFrame, sumCap: Int, k: Int,
                            baseTheta: Long,
                            newGen: Long): (Long, Long, Long) = {
-    val sNext = new org.apache.hadoop.fs.Path(path, genDir("summary", newGen))
+    val sNext = new org.apache.hadoop.fs.Path(path,
+      ArtifactLock.genDirName("summary", newGen))
     // row counts ride the write as observed metrics — the manifest's
     // summary_rows/n_tokens used to cost two post-swap parquet counts
     // (the x78 job trim)
@@ -693,30 +669,8 @@ object VocabIndex {
     ArtifactLock.retryingLoad(loadOnce(spark, path))
 
   private def loadOnce(spark: SparkSession, path: String): Artifact = {
-    val mPath = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath))
-      throw new IllegalArgumentException(
-        s"no vocabulary artifact at $path (missing manifest.json)")
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try graft.engine.QueryJson.parse(text)
-      catch { case e: Exception => throw new IllegalArgumentException(
-        s"malformed vocabulary manifest at $path: ${e.getMessage}") }
-    val manifest = parsed match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalArgumentException(
-        s"malformed vocabulary manifest at $path")
-    }
-    if (!manifest.get("kind").contains("vocabulary"))
-      throw new IllegalArgumentException(
-        s"artifact at $path is not a vocabulary (kind=${manifest.get("kind")})")
-    if (!manifest.get("version").contains(FormatVersion.toLong))
-      throw new IllegalArgumentException(
-        s"unsupported vocabulary version ${manifest.get("version")} at $path")
+    val manifest = ArtifactLock.readManifest(spark, path, Kind, FormatVersion)
+    val dataGen = manifest.dataGen
     val k = manifest.get("k") match {
       case Some(l: Long) if l > 0 && l <= Int.MaxValue => l.toInt
       case other => throw new IllegalArgumentException(
@@ -728,12 +682,6 @@ object VocabIndex {
       case other => throw new IllegalArgumentException(
         s"vocabulary at $path is corrupt: bad capacity $other")
     }
-    val dataGen: Long = manifest.get("data_gen") match {
-      case None => 0L
-      case Some(l: Long) if l >= 0 => l
-      case other => throw new IllegalArgumentException(
-        s"vocabulary at $path is corrupt: bad data_gen $other")
-    }
     import org.apache.spark.sql.types._
     val theta = manifest.get("theta") match {
       case None => None
@@ -743,13 +691,15 @@ object VocabIndex {
     }
     val summary = theta.map { _ =>
       // a theta-recording manifest promises the mergeable summary
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path,
-          genDir("summary", dataGen))))
+      val summaryDir = new org.apache.hadoop.fs.Path(path,
+        ArtifactLock.genDirName("summary", dataGen))
+      if (!summaryDir.getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(summaryDir))
         throw new IllegalArgumentException(
           s"vocabulary at $path is corrupt: manifest records theta but " +
             "the summary relation is missing")
       val s =
-        try spark.read.parquet(s"$path/${genDir("summary", dataGen)}")
+        try spark.read.parquet(summaryDir.toString)
         catch { case e: org.apache.spark.sql.AnalysisException =>
           throw new IllegalArgumentException(
             s"vocabulary at $path is corrupt: unreadable summary: ${e.getMessage}", e) }
@@ -764,22 +714,18 @@ object VocabIndex {
     }
     // capacity artifacts derive the vocabulary lazily from the summary
     // (its top-k rows — see [[writeSummary]]); schema is then by
-    // construction. Exact artifacts read the stored relation. Artifacts
-    // written before the round-20 trim carry BOTH; the derived form is
-    // byte-identical, so deriving is always right when a summary exists.
+    // construction. Exact artifacts read the stored relation.
     val vocab = summary match {
       case Some(s) => deriveVocab(s, k)
       case None =>
         val v =
-          try spark.read.parquet(s"$path/${genDir("vocabulary", dataGen)}")
+          try spark.read.parquet(
+            s"$path/${ArtifactLock.genDirName("vocabulary", dataGen)}")
           catch { case e: org.apache.spark.sql.AnalysisException =>
             // cause attached: retryingLoad's classifier walks the chain to
             // tell a maintenance race (PATH_NOT_FOUND) from real corruption.
-            // Note for readers of FOREIGN artifacts: capacity-built
-            // artifacts (manifest records `theta`) store only the summary
-            // and never reach this branch — a missing vocabulary/ here
-            // with a theta-less manifest is real corruption, not the
-            // round-20 layout change.
+            // Capacity-built artifacts (manifest records `theta`) store
+            // only the summary and never reach this branch.
             throw new IllegalArgumentException(
               s"vocabulary at $path is corrupt: unreadable relation " +
                 "(note: capacity-built artifacts store a summary instead " +

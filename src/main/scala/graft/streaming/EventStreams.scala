@@ -514,12 +514,13 @@ object EventStreams {
     //      timeClusteredLayout), the native session_window strategy is
     //      provably in its fast regime (map-side merge collapses each
     //      split's narrow window; ~3× the segmented carry single-node,
-    //      tools/ProfileSessionize) and runs automatically;
+    //      ProfileSessionize, tool removed, see af949c0) and runs
+    //      automatically;
     //   2. measured-skew tier — otherwise a content-deterministic hash
     //      sample measures the hottest session key's share
     //      (measuredUniformKeys); a provably-uniform corpus takes the
     //      one-exchange windowed strategy (2-3× the carry at 1.28B,
-    //      tools/ProfileSessionizeStages);
+    //      ProfileSessionizeStages, tool removed, see af949c0);
     //   3. default — any measured hot key, thin sample, or missing
     //      stats keeps the skew-robust segmented carry.
     // Every tier's output is pinned row-identical, so the gates trade
@@ -553,7 +554,8 @@ object EventStreams {
     // content-deterministic hash sample bounds the hottest user_id's
     // event share, and a provably-uniform corpus takes the one-exchange
     // windowed strategy (2-3x the carry at the billion-row rung —
-    // tools/ProfileSessionizeStages: 165 s vs 359-565 s at 1.28B). Any
+    // ProfileSessionizeStages: 165 s vs 359-565 s at 1.28B; tool removed,
+    // see af949c0). Any
     // measured hot key — or a sample too thin to trust — keeps the
     // skew-robust segmented default. The probe costs one column-pruned
     // scan + a two-level aggregate, paid only above the row gate where
@@ -572,7 +574,8 @@ object EventStreams {
         // relations balloon toward one row per event and the local
         // windows become pure overhead. At ≥4 gaps per granule the local
         // pass closes most sessions where they happen (measured at sf1:
-        // 6.5 s → ~4.7 s, tools/ProfileSessionize), while the hot-key
+        // 6.5 s → ~4.7 s, ProfileSessionize; tool removed, see af949c0),
+        // while the hot-key
         // spread keeps up to span/(4·gap) independent segments — for
         // real corpora (span ≫ gap) that still saturates any cluster.
         // Preferred span source: parquet FOOTER min/max (metadata-only,
@@ -621,12 +624,13 @@ object EventStreams {
     * user hash already satisfies — NO second exchange, no carry
     * machinery. Output ≡ [[sessionizeBatch]]'s other strategies row for
     * row (pinned in OpsSpec and count-verified at 1.28B events,
-    * tools/ProfileSessionizeStages).
+    * ProfileSessionizeStages; tool removed, see af949c0).
     *
     * When to choose it: corpora whose session key is reasonably UNIFORM
     * — there, at the billion-row rung, it runs ~2–3× faster than the
     * segmented carry (165 s vs 359–565 s at 1.28B events / 17M uniform
-    * users, ProfileSessionizeStages: the carry's join + final
+    * users, ProfileSessionizeStages, tool removed, see af949c0: the
+    * carry's join + final
     * (user, sid) aggregate over the ~0.8B-row partials relation
     * dominates its wall). The AUTO default stays the segmented carry:
     * this form funnels each user's whole history through one partition,
@@ -719,7 +723,8 @@ object EventStreams {
 
   /** Gap sessionization via Spark's NATIVE session_window aggregate —
     * same output as [[sessionizeBatch]] row for row (asserted in
-    * StreamingSpec and bit-equal at sf1, tools/CheckNativeSessions).
+    * StreamingSpec and bit-equal at sf1, CheckNativeSessions; tool
+    * removed, see af949c0).
     * Chosen automatically by [[sessionizeBatch]] when parquet row-group
     * footers prove a time-clustered layout; still available as an
     * explicit strategy for inputs the footer trace can't see.
@@ -730,7 +735,8 @@ object EventStreams {
     * pipelines write parquet in time order) each mapper collapses a hot
     * user's slice to a handful of sessions and the reduce side sees
     * almost nothing: ~3× faster than the segmented carry at sf1
-    * single-node (1.4 s vs 4.3 s, tools/ProfileSessionize). But the
+    * single-node (1.4 s vs 4.3 s, ProfileSessionize; tool removed, see
+    * af949c0). But the
     * reduction is LAYOUT-DEPENDENT: on a temporally-scattered layout
     * (hash-partitioned storage, shuffled inputs) map-side merging
     * degenerates and the hot user's near-raw event stream funnels into
@@ -793,7 +799,8 @@ object EventStreams {
     * join eliminated by ordering, and the chain emission replaces the
     * result-sized (user, sid) hash aggregate with streaming prefix
     * arithmetic over the already-sorted partition (1.28B events:
-    * 368.6 → 234.4 s end-to-end, ProfileSessionizeStages round 17;
+    * 368.6 → 234.4 s end-to-end, ProfileSessionizeStages round 17, tool
+    * removed, see af949c0;
     * output pinned identical at ×12800 by ScaleProbe's forced-segmented
     * invariant). Skew bound: sessions are gap-separated, so a granule
     * holds ≤ ~width/gap + 1 local sessions — the per-user carry
@@ -838,7 +845,8 @@ object EventStreams {
     // end from itself (monotone), counts/sums as prefix differences.
     // The old groupBy(user, sid) built a hash state of one entry per
     // SESSION — result-sized, 185.7 s of the 368.6 s wall at 1.28B
-    // (ProfileSessionizeStages) — where the chain emission is pure
+    // (ProfileSessionizeStages; tool removed, see af949c0) — where the
+    // chain emission is pure
     // streaming work over the already-sorted carry partition: same two
     // exchanges, zero aggregate. Exactness: counts are longs; values
     // accumulate in decimal(38,12) so the prefix DIFFERENCE carries no
@@ -974,9 +982,10 @@ object EventStreams {
     // canonically unequal, so AQE couldn't stage-reuse the exchange —
     // a documented ~2× at sf1); this shape measures left ≈ inner
     // (ProfileIjParts, warm: 1.3 s vs 1.4 s at sf1, one shuffled
-    // SortMergeJoin each). The ≤2× granule explode moves from the
-    // anchor side to the match side — the exchanged row totals are
-    // within ~25% of each other on the events fixture and the swap
+    // SortMergeJoin each; tool removed, see af949c0). The ≤2× granule
+    // explode moves from the anchor side to the match side — the
+    // exchanged row totals are within ~25% of each other on the events
+    // fixture and the swap
     // buys the single-execution left. Matchless anchors (including
     // null-key and null-ts ones, and anchors whose event_id collides
     // with a matched one — each anchor is a preserved ROW, so no
@@ -1237,7 +1246,8 @@ object EventStreams {
     * partial-combine. The previous shape (DISTINCT (user, period) +
     * min-over-distinct + user join) shuffled the full pair relation —
     * 513M pairs at 1.28B events, measured 152-163 s
-    * (tools/ProfileRetentionStages) against ~40 s for this form — and
+    * (ProfileRetentionStages; tool removed, see af949c0) against ~40 s
+    * for this form — and
     * scanned the log twice. maxOffset > 62 (beyond one mask word)
     * falls back to that pair shape, window-based: distinct, then
     * cohort = min over a user-partitioned window on the already-small

@@ -49,7 +49,12 @@ import graft.ops.ArtifactLock
   */
 private[graft] object StreamState {
 
-  private val FormatVersion = 1L
+  private val FormatVersion = 1
+
+  /** A state dir's manifest identity: `kind` names the owning stream
+    * family, so another stream's accumulator reads as a foreign kind. */
+  private def kindOf(kind: String) = ArtifactLock.ArtifactKind(
+    kind, "stream-state", s"stream state of kind $kind")
 
   /** The owning StreamingQuery's STABLE id, read from the thread-local
     * property Spark stamps on the stream-execution thread (foreachBatch
@@ -113,24 +118,10 @@ private[graft] object StreamState {
   def bumpEpoch(spark: SparkSession, dir: String, kind: String,
                 epoch: Long): Unit =
     ArtifactLock.withWriteLock(dir) {
-      val mPath = new org.apache.hadoop.fs.Path(dir, "manifest.json")
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) throw new IllegalStateException(
-        s"cannot bump stream-state epoch at $dir: no snapshot persisted yet")
-      val in = fs.open(mPath)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val manifest = graft.engine.QueryJson.parse(text) match {
-        case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-        case _ => throw new IllegalStateException(
-          s"malformed stream-state manifest at $dir")
-      }
-      if (!manifest.get("kind").contains(kind))
-        throw new IllegalStateException(
-          s"state dir $dir holds kind=${manifest.get("kind")}, not $kind")
-      val next = scala.collection.mutable.LinkedHashMap[String, Any]()
-      manifest.foreach { case (k, v) => next(k) = v }
+      val manifest = ArtifactLock.readManifest(spark, dir, kindOf(kind),
+        FormatVersion)
+      val next =
+        scala.collection.mutable.LinkedHashMap[String, Any]() ++= manifest.fields
       next("epoch") = epoch
       ArtifactLock.publishManifest(spark, dir,
         graft.engine.QueryJson.write(next))
@@ -152,24 +143,10 @@ private[graft] object StreamState {
   private def loadOnce(spark: SparkSession, dir: String, kind: String,
                        bases: Seq[String]): Option[Snapshot] = {
     val mPath = new org.apache.hadoop.fs.Path(dir, "manifest.json")
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mPath)) return None
-    val in = fs.open(mPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val manifest = graft.engine.QueryJson.parse(text) match {
-      case m: scala.collection.Map[String @unchecked, Any @unchecked] => m
-      case _ => throw new IllegalStateException(
-        s"malformed stream-state manifest at $dir")
-    }
-    if (!manifest.get("kind").contains(kind))
-      throw new IllegalStateException(
-        s"state dir $dir holds kind=${manifest.get("kind")}, not $kind — " +
-          "refusing to resume against another stream's accumulator")
-    if (!manifest.get("version").contains(FormatVersion))
-      throw new IllegalStateException(
-        s"unsupported stream-state version ${manifest.get("version")} at $dir")
+    if (!mPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(mPath))
+      return None
+    val manifest = ArtifactLock.readManifest(spark, dir, kindOf(kind),
+      FormatVersion)
     // identity pairing: the snapshot carries its writer's stable query
     // id; a resuming query reuses the id from its checkpoint metadata,
     // so any mismatch means the state dir and the checkpoint are from
@@ -188,18 +165,15 @@ private[graft] object StreamState {
       case other => throw new IllegalStateException(
         s"stream-state manifest at $dir has no epoch (got $other)")
     }
-    val gen = manifest.get("data_gen") match {
-      case Some(l: Long) if l >= 0 => l
-      case _ => 0L
-    }
     val rels = bases.map { b =>
       // eager materialization INSIDE the retry attempt: the returned
       // frames must not be lazy plans over files a concurrent prune
       // can delete after this call returns
-      b -> spark.read.parquet(s"$dir/${ArtifactLock.genDirName(b, gen)}")
+      b -> spark.read.parquet(
+          s"$dir/${ArtifactLock.genDirName(b, manifest.dataGen)}")
         .localCheckpoint()
     }.toMap
-    Some(Snapshot(epoch, rels, manifest))
+    Some(Snapshot(epoch, rels, manifest.fields))
   }
 
   /** Fail fast when the snapshot and the checkpoint's first replayed

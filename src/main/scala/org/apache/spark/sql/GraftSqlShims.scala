@@ -14,6 +14,14 @@ object GraftSqlShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's `bloom_filter_agg` over `c` at an explicit sizing — the
+    * aggregate `Dataset.stat.bloomFilter` runs, registered internal-only
+    * and so reachable through `Column.internalFn` alone. It evaluates to
+    * null when no non-null value was inserted. */
+  def bloomFilterAgg(c: Column, nItems: Long, numBits: Long): Column =
+    Column.internalFn("bloom_filter_agg", c, functions.lit(nItems),
+      functions.lit(numBits))
+
   /** Materialized in-memory byte size of a cached DataFrame, from the
     * InMemoryRelation's accumulated stats — the honest analog of the
     * reference's deep `memory_usage` (only meaningful after the cache has

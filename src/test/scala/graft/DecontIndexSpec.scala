@@ -43,22 +43,29 @@ class DecontIndexSpec extends AnyFunSuite {
     Decontaminate.contaminated(train, evalDf, "doc_id", "text", n = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
-  test("pre-raw-format artifacts (parquet sketch) still load and probe") {
-    // the round-21 trim stores the sketch as bloom[-g]/sketch.bin; an
-    // artifact written before it (1-row parquet sketch) must keep
-    // loading — rewrite a fresh artifact's sketch into the legacy
-    // layout and load through it
-    val path = tmp("dc_legacy")
-    val art = DecontIndex.buildAndSave(eval, "text", path, n = 4)
-    val genDir = new org.apache.hadoop.fs.Path(path,
-      graft.ops.ArtifactLock.genDirName("bloom", art.dataGen))
-    val fs = genDir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(genDir, true)
-    Seq(Tuple1(art.bloomBytes)).toDF("bloom").coalesce(1)
-      .write.parquet(genDir.toString)
-    val legacy = DecontIndex.load(spark, path)
-    assert(java.util.Arrays.equals(legacy.bloomBytes, art.bloomBytes))
-    assert(probe(legacy) == inline(eval))
+  test("v1 and v99 manifests fail with a version mismatch, not corrupt") {
+    // format 1 stored the sketch as a one-row parquet relation and no
+    // longer loads: a manifest from an older OR a newer binary names both
+    // formats instead of loading or reading as corrupt
+    val path = tmp("dc_version")
+    DecontIndex.buildAndSave(eval, "text", path, n = 4)
+    val p = new org.apache.hadoop.fs.Path(path, "manifest.json")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val text = {
+      val in = fs.open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    for (v <- Seq(1, 99)) {
+      val out = fs.create(p, true)
+      try out.write(text.replaceFirst("\"version\":[0-9]+", s"\"version\":$v")
+        .getBytes("UTF-8"))
+      finally out.close()
+      val e = intercept[IllegalArgumentException] { DecontIndex.load(spark, path) }
+      assert(e.getMessage.contains(
+        s"artifact format $v, this binary reads ${DecontIndex.FormatVersion}"),
+        e.getMessage)
+      assert(!e.getMessage.contains("corrupt"))
+    }
   }
 
   test("index-served contamination equals the inline operator exactly") {

@@ -141,7 +141,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
     // foreign manifest kind
     val foreign = s"$root/foreign"
-    writeManifest(foreign, """{"version":1,"kind":"something_else"}""")
+    writeManifest(foreign, s"""{"version":${IvfIndex.FormatVersion},"kind":"something_else"}""")
     val e2 = intercept[IllegalArgumentException] { IvfIndex.load(spark, foreign) }
     assert(e2.getMessage.contains("not an IVF quantizer"))
 
@@ -150,7 +150,7 @@ class IvfIndexSpec extends AnyFunSuite {
     IvfIndex.save(spark, path, Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)),
       nCells = 2, kmeansIters = 0)
     writeManifest(path,
-      """{"version":1,"kind":"ivf_coarse_quantizer","n_cells":2,
+      s"""{"version":${IvfIndex.FormatVersion},"kind":"ivf_coarse_quantizer","n_cells":2,
          |"n_centroids":3,"dim":2,"kmeans_iters":0}""".stripMargin)
     val e3 = intercept[IllegalArgumentException] { IvfIndex.load(spark, path) }
     assert(e3.getMessage.contains("corrupt"))
@@ -161,6 +161,21 @@ class IvfIndexSpec extends AnyFunSuite {
          |"n_centroids":2,"dim":2,"kmeans_iters":0}""".stripMargin)
     val e4 = intercept[IllegalArgumentException] { IvfIndex.load(spark, path) }
     assert(e4.getMessage.contains("version"))
+
+    // unparsable manifest: the same IllegalArgumentException as every
+    // other family, not the raw JSON parse exception
+    writeManifest(path, "{truncated garbage")
+    val e5 = intercept[IllegalArgumentException] { IvfIndex.load(spark, path) }
+    assert(e5.getMessage.contains("malformed IVF manifest"))
+
+    // a data_gen that is not a non-negative integer is corrupt; it must
+    // not read as generation 0 (which this artifact's files would serve)
+    writeManifest(path,
+      s"""{"version":${IvfIndex.FormatVersion},"kind":"ivf_coarse_quantizer",
+         |"data_gen":"x","n_cells":2,"n_centroids":2,"dim":2,
+         |"kmeans_iters":0}""".stripMargin)
+    val e6 = intercept[IllegalArgumentException] { IvfIndex.load(spark, path) }
+    assert(e6.getMessage.contains("bad data_gen"))
   }
 
   test("save is an overwrite: re-saving a different quantizer replaces it") {
@@ -188,46 +203,62 @@ class IvfIndexSpec extends AnyFunSuite {
       corpusDf, "id", loaded, exclude, "xid"))
     assert(fromArtifact == inline)
     assert(inline == (1L to 500L).filterNot(i => (i - 1) % 7 == 0).toSeq)
+    // an exclusion list with no non-null id (empty, all-null) builds the
+    // empty sketch: it round-trips, excludes nothing, and an update
+    // merges into it
+    val nullIds = Seq(Tuple1(None: Option[Long]), Tuple1(None: Option[Long]))
+      .toDF("xid")
+    for ((noIds, name) <- Seq((exclude.limit(0), "empty"), (nullIds, "all_null"))) {
+      val p = tmpDir() + s"/bloom_$name"
+      val bytes = BloomIndex.buildAndSave(noIds, "xid", fpp = 0.01, p)
+      assert(java.util.Arrays.equals(bytes, BloomIndex.load(spark, p)))
+      assert(ids(Dedup.excludeByBloomWith(corpusDf, "id", bytes, noIds, "xid")) ==
+        (1L to 500L).toSeq)
+      // a sketch sized for ~no ids outgrows any fpp bound; lift it
+      val upd = BloomIndex.update(spark, p, exclude, "xid", maxFppFactor = 1e6)
+      assert(ids(Dedup.excludeByBloomWith(corpusDf, "id", upd.bytes, exclude,
+        "xid")) == inline)
+      // the empty sketch's merge is a byte-exact no-op: updating it with
+      // the list equals hashing the list at the same sizing
+      assert(java.util.Arrays.equals(upd.bytes, Dedup.buildBloomSized(exclude,
+        "xid", BloomIndex.loadWithMeta(spark, p).nItemsBuilt.get, 0.01)))
+    }
   }
 
-  test("pre-raw-format artifacts (parquet sketch/centroids) still load") {
+  test("v1 and v99 bloom/IVF manifests fail with a version mismatch") {
     import graft.ops.BloomIndex
-    // the round-21 trim stores driver-held payloads as raw files
-    // (sketch.bin / centroids.bin) instead of 1-row/1-file parquet
-    // relations; artifacts written BEFORE the trim must keep loading —
-    // hand-write both legacy layouts and load them
+    // format 1 (parquet sketch/centroids) is gone: a manifest from an
+    // older OR a newer binary names both formats instead of loading or
+    // reading as corrupt
     val root = tmpDir()
-    // legacy bloom: 1-row (bloom BINARY) parquet + manifest
-    val exclude = (1L to 100L by 3).map(Tuple1(_)).toDF("xid")
-    val path = s"$root/legacy_bloom"
-    val built = {
-      val bf = exclude.stat.bloomFilter("xid", 34L, 0.01)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos); bos.toByteArray
+    val bloom = s"$root/bloom"
+    BloomIndex.buildAndSave((1L to 100L by 3).map(Tuple1(_)).toDF("xid"),
+      "xid", fpp = 0.01, bloom)
+    val ivf = s"$root/ivf"
+    IvfIndex.save(spark, ivf, Seq(Seq(1.0, 0.25), Seq(-0.5, 0.125)),
+      nCells = 2, kmeansIters = 0)
+    def setVersion(dir: String, v: Int): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir, "manifest.json")
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val in = fs.open(p)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      val out = fs.create(p, true)
+      try out.write(text.replaceFirst("\"version\":[0-9]+", s"\"version\":$v")
+        .getBytes("UTF-8"))
+      finally out.close()
     }
-    Seq(Tuple1(built)).toDF("bloom").coalesce(1)
-      .write.parquet(s"$path/bloom")
-    val mp = new org.apache.hadoop.fs.Path(path, "manifest.json")
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(
-      s"""{"version":1,"kind":"bloom_exclusion","fpp":0.01,"n_bytes":${built.length}}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    assert(java.util.Arrays.equals(BloomIndex.load(spark, path), built))
-    // legacy ivf: (cell, centroid) parquet + manifest
-    val cents = Seq(Seq(1.0, 0.25), Seq(-0.5, 0.125), Seq(0.0625, 2.0))
-    val ipath = s"$root/legacy_ivf"
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-      .coalesce(1).write.parquet(s"$ipath/centroids")
-    val imp = new org.apache.hadoop.fs.Path(ipath, "manifest.json")
-    val iout = fs.create(imp, true)
-    try iout.write(
-      """{"version":1,"kind":"ivf_coarse_quantizer","n_cells":3,
-         |"n_centroids":3,"dim":2,"kmeans_iters":0}""".stripMargin
-        .getBytes("UTF-8"))
-    finally iout.close()
-    assert(IvfIndex.load(spark, ipath) == cents) // exact doubles both layouts
+    for ((dir, load, current) <- Seq(
+           (bloom, () => BloomIndex.load(spark, bloom), BloomIndex.FormatVersion),
+           (ivf, () => IvfIndex.load(spark, ivf), IvfIndex.FormatVersion));
+         v <- Seq(1, 99)) {
+      setVersion(dir, v)
+      val e = intercept[IllegalArgumentException] { load() }
+      assert(e.getMessage.contains("version"))
+      assert(e.getMessage.contains(s"artifact format $v, this binary reads $current"),
+        e.getMessage)
+      assert(!e.getMessage.contains("corrupt"))
+    }
   }
 
   test("BloomIndex.load fails fast on missing, foreign, and corrupt artifacts") {
@@ -253,7 +284,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val path = s"$root/bloom"
     BloomIndex.save(spark, path, Array[Byte](1, 2, 3, 4), fpp = 0.01)
     writeManifest(path,
-      """{"version":1,"kind":"bloom_exclusion","fpp":0.01,"n_bytes":999}""")
+      s"""{"version":${BloomIndex.FormatVersion},"kind":"bloom_exclusion","fpp":0.01,"n_bytes":999}""")
     val e3 = intercept[IllegalArgumentException] { BloomIndex.load(spark, path) }
     assert(e3.getMessage.contains("corrupt"))
     // unsupported version
@@ -268,12 +299,14 @@ class IvfIndexSpec extends AnyFunSuite {
     val e5 = intercept[IllegalArgumentException] { BloomIndex.load(spark, path) }
     assert(e5.getMessage.contains("malformed bloom manifest"))
     writeManifest(path,
-      """{"version":1,"kind":"bloom_exclusion","fpp":0.01,"n_bytes":4}""")
+      s"""{"version":${BloomIndex.FormatVersion},"kind":"bloom_exclusion","fpp":0.01,"n_bytes":4}""")
     val bloomDir = new org.apache.hadoop.fs.Path(path, "bloom")
     bloomDir.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(bloomDir, true)
     val e6 = intercept[IllegalArgumentException] { BloomIndex.load(spark, path) }
     assert(e6.getMessage.contains("unreadable sketch"))
+    // the missing file stays the cause: retryingLoad heals on it
+    assert(e6.getCause.isInstanceOf[java.io.FileNotFoundException])
   }
 
   test("BloomIndex records the build-time list size; loadWithMeta surfaces it") {
@@ -340,7 +373,7 @@ class IvfIndexSpec extends AnyFunSuite {
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       val out = fs.create(p, true)
       try out.write(
-        (s"""{"version":1,"kind":"bloom_exclusion","fpp":0.01,""" +
+        (s"""{"version":${BloomIndex.FormatVersion},"kind":"bloom_exclusion","fpp":0.01,""" +
           s""""n_bytes":${legacyBytes.length},""" +
           s""""fingerprint":"${BloomIndex.fingerprint(exclude, "xid")}"}""")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -181,7 +181,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     try out.write(
-      ("""{"version":1,"kind":"minhash_signatures","num_hashes":64,""" +
+      (s"""{"version":${MinHashIndex.FormatVersion},"kind":"minhash_signatures","num_hashes":64,""" +
         """"shingle_size":3,"n_docs":6,"fingerprint":"0"}""")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -347,14 +347,14 @@ class MinHashIndexSpec extends AnyFunSuite {
     writeManifest(path, """{"version":99,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}""")
     val e3 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
     assert(e3.getMessage.contains("version"))
-    writeManifest(path, """{"version":1,"kind":"minhash_signatures","shingle_size":3}""")
+    writeManifest(path, s"""{"version":${MinHashIndex.FormatVersion},"kind":"minhash_signatures","shingle_size":3}""")
     val e4 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
     assert(e4.getMessage.contains("num_hashes"))
     writeManifest(path, "{not json")
     val e5 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
     assert(e5.getMessage.contains("malformed minhash manifest"))
     // unreadable signatures parquet
-    writeManifest(path, """{"version":1,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}""")
+    writeManifest(path, s"""{"version":${MinHashIndex.FormatVersion},"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}""")
     val sigDir = new org.apache.hadoop.fs.Path(path, "signatures")
     sigDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(sigDir, true)
     val e6 = intercept[IllegalArgumentException] { MinHashIndex.load(spark, path) }
@@ -399,7 +399,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = fs.create(p, true)
     try out.write(
-      """{"version":1,"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}"""
+      s"""{"version":${MinHashIndex.FormatVersion},"kind":"minhash_signatures","num_hashes":64,"shingle_size":3}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val e4 = intercept[IllegalArgumentException] {

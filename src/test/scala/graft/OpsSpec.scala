@@ -1396,6 +1396,13 @@ class OpsSpec extends AnyFunSuite {
     assert(got.count() == want.count()) // null-id row kept, like the anti-join
     assert(got.select("payload").collect().map(_.getString(0)).toSet ==
       want.select("payload").collect().map(_.getString(0)).toSet)
+    // an exclusion list with no non-null id (empty, all-null) excludes
+    // nothing — Spark's bloom aggregate returns null there, which must
+    // not surface as a NullPointerException
+    val nullIds = Seq(Tuple1(None: Option[Long])).toDF("xid")
+    for (noIds <- Seq(exclude.limit(0), nullIds))
+      assert(Dedup.excludeByBloom(corpus, "id", noIds, "xid").count() ==
+        corpus.count())
   }
 
   // ------------------------- decontamination -------------------------

@@ -345,14 +345,14 @@ class VocabIndexSpec extends AnyFunSuite {
     writeManifest(path, """{"version":99,"kind":"vocabulary","k":3}""")
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("version"))
-    writeManifest(path, """{"version":1,"kind":"vocabulary"}""")
+    writeManifest(path, s"""{"version":${VocabIndex.FormatVersion},"kind":"vocabulary"}""")
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("bad k"))
     writeManifest(path, "{not json")
     assert(intercept[IllegalArgumentException] {
       VocabIndex.load(spark, path) }.getMessage.contains("malformed"))
     // wrong relation schema
-    writeManifest(path, """{"version":1,"kind":"vocabulary","k":3}""")
+    writeManifest(path, s"""{"version":${VocabIndex.FormatVersion},"kind":"vocabulary","k":3}""")
     val vDir = new org.apache.hadoop.fs.Path(path, "vocabulary")
     vDir.getFileSystem(spark.sessionState.newHadoopConf()).delete(vDir, true)
     Seq(("a", 1L)).toDF("token", "nope").write.parquet(s"$path/vocabulary")
