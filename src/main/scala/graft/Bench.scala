@@ -100,27 +100,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC everywhere: the NTZ time handling (timeEmbedding's NTZ->LTZ
-      // cast, x47's epoch-micro window bounds, sessionize's NTZ
-      // unification) assumes session-UTC; a DST host zone would make the
-      // NTZ embedding non-monotone and shift window bounds.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
     // AQE coalescing stays on Spark's parallelism-first default: an A/B at
     // sf0.1 measured it against size-based coalescing at 35.0 s vs 41.7 s
     // for the full suite (size-based collapsed CPU-heavy post-shuffle
     // stages to one task).
-    // committer v2 + codegen cache sizing moved to the shared library
-    // tuning (graft.engine.SessionTuning) so Bench, Verify and the HTTP
-    // server run the same write path — a conf that lived only here
-    // measured the bench harness, not the library (round-20 verdict).
-    val spark = graft.engine.SessionTuning.tuned(builder).getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jvmsAtStart = competingJvms()
     // calibration runs BEFORE warmups: the numbers must reflect the box,

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.Map
 import scala.collection.mutable

@@ -2,14 +2,37 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Library-level session configuration shared by every entry point that
-  * drives graft queries (Bench, Verify, the HTTP server). These confs
-  * belong to the LIBRARY, not to any one harness: an artifact writer's
-  * commit cost or codegen-cache pressure is the same regardless of who
-  * built the session, so setting them only where the timing happens
-  * (the round-20 state for the committer) measured the bench instead of
-  * the library. */
+/** The one session recipe every graft entry point builds from: the HTTP
+  * server, Bench, Verify, the `graft.tools` mains and the test session.
+  * Callers add only what their workload needs on top of [[local]]. These
+  * confs belong to the LIBRARY, not to any one harness: an artifact
+  * writer's commit cost or codegen-cache pressure is the same regardless
+  * of who built the session, so setting them only where the timing
+  * happens measures the harness instead of the library. */
 object SessionTuning {
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, default 4. */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
+
+  /** A local session builder on `cpus` cores with one shuffle partition
+    * per core, no UI, and [[tuned]]'s confs.
+    *
+    *  - Session time zone UTC: the NTZ time handling (timeEmbedding's
+    *    NTZ->LTZ cast, x47's epoch-micro window bounds, sessionize's NTZ
+    *    unification) assumes session-UTC; a DST host zone would make the
+    *    NTZ embedding non-monotone and shift window bounds.
+    *  - `nanosAsLong`: parquet INT64 nanosecond timestamps (the older
+    *    events.parquet layout) read as LONG nanos, which the read
+    *    boundaries (EventStreams.eventsFrame, Joins.timeEmbedding)
+    *    normalize; without it Spark refuses the column.
+    */
+  def local(cpus: Int = SessionTuning.cpus): SparkSession.Builder =
+    tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 
   /** Performance confs applied by all graft mains.
     *

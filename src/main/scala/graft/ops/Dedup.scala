@@ -1522,23 +1522,6 @@ object Dedup {
   private def jaccardOf(interCol: Column, na: Column, nb: Column): Column =
     interCol.cast("double") / (na + nb - interCol).cast("double")
 
-  /** Exact token-set Jaccard for candidate pairs. `candidates` must have
-    * id_a/id_b; |union| is derived as n_a + n_b − |intersect| so only one
-    * merge pass runs per pair. */
-  def jaccardVerify(df: DataFrame, idCol: String, textCol: String,
-                    candidates: DataFrame, threshold: Double): DataFrame = {
-    val tok = df.select(col(idCol).as("id"),
-      sortedTokenHashes(col(textCol)).as("hs"))
-      .withColumn("n", size(col("hs")))
-    candidates
-      .join(tok.select(col("id").as("id_a"), col("hs").as("hs_a"), col("n").as("n_a")), "id_a")
-      .join(tok.select(col("id").as("id_b"), col("hs").as("hs_b"), col("n").as("n_b")), "id_b")
-      .withColumn("__i", intersectCount(col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", jaccardOf(col("__i"), col("n_a"), col("n_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-  }
-
   /** All-pairs Jaccard within an id-bounded slice over a prepared
     * (id, sorted-distinct-hash-array) relation. */
   private def pairwiseJaccard(tok: DataFrame, threshold: Double): DataFrame = {

@@ -107,10 +107,6 @@ object Similarity {
       org.apache.spark.sql.GraftSqlShims.expression(a.cast("array<double>")),
       org.apache.spark.sql.GraftSqlShims.expression(b.cast("array<double>"))))
 
-  /** HOF dot product — bit-identical to the kernel (asserted in tests). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = {

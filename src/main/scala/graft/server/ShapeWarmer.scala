@@ -1,6 +1,5 @@
 package graft.server
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
 /** Cross-dataset plan-shape memoization, realized as store-time warmup.

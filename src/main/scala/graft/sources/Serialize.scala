@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** Result serialization to CSV / JSON record formats matching pandas
   * `to_csv(index=False)` / `to_json(orient='records')`
@@ -44,11 +43,9 @@ object Serialize {
       .filterNot { case (f, _) => isHidden(f.name) }
 
   /** pandas to_csv: header, no index, empty string for null, minimal
-    * quoting. Floats keep a trailing .0 (pandas float repr). */
-  def toCsv(df: DataFrame): String = toCsvCounted(df)._1
-
-  /** CSV plus the serialized row count — when a query has no offset/limit
-    * the count IS the unsliced length, saving the separate count job. */
+    * quoting. Floats keep a trailing .0 (pandas float repr). Returns the
+    * serialized row count too — when a query has no offset/limit the
+    * count IS the unsliced length, saving the separate count job. */
   def toCsvCounted(df: DataFrame, maxBytes: Long = 0L): (String, Long) = {
     val fields = visibleFields(df)
     val sb = new StringBuilder
@@ -92,8 +89,6 @@ object Serialize {
   /** pandas to_json(orient='records'): `[{...},{...}]`, NaN/Inf → null
     * (reference: test_api.py:109-116 — division-by-zero inf serializes as
     * JSON null). */
-  def toJson(df: DataFrame): String = toJsonCounted(df)._1
-
   def toJsonCounted(df: DataFrame, maxBytes: Long = 0L): (String, Long) = {
     val fields = visibleFields(df)
     val sb = new StringBuilder
@@ -121,9 +116,7 @@ object Serialize {
 
   /** NDJSON output: one record object per line, no trailing newline
     * (pandas `to_json(orient="records", lines=True)` shape); same value
-    * formatting as [[toJson]] (NaN/inf → null, utf-8). */
-  def toJsonLines(df: DataFrame): String = toJsonLinesCounted(df)._1
-
+    * formatting as [[toJsonCounted]] (NaN/inf → null, utf-8). */
   def toJsonLinesCounted(df: DataFrame, maxBytes: Long = 0L): (String, Long) = {
     val fields = visibleFields(df)
     val sb = new StringBuilder

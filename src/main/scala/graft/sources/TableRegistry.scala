@@ -27,9 +27,4 @@ object TableRegistry {
     names.foreach(n =>
       try table(spark, dir, n).count()
       catch { case _: Throwable => () }) // missing table: let queries report
-
-  def clear(): Unit = {
-    cache.values().forEach(df => df.unpersist())
-    cache.clear()
-  }
 }

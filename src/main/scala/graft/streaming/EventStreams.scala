@@ -494,7 +494,6 @@ object EventStreams {
   def sessionizeBatch(events: DataFrame, gapSeconds: Long,
                       granule: Option[Long] = None,
                       autoNative: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     granule.foreach(w => require(w > 0, "sessionizeBatch granule must be positive"))
     // An NTZ time column unifies on the session-zone timestamp up front
     // (UTC in every graft entry point, so the wall time IS the instant):
@@ -506,7 +505,6 @@ object EventStreams {
         events.withColumn("ts", col("ts").cast("timestamp"))
       case _ => events
     }
-    val tl = col("ts").cast("long")
     // Above the row gate with no explicit granule, the auto strategy is
     // EVIDENCE-TIERED before any width derivation:
     //   1. layout tier — when the parquet row-group footers PROVE the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline MinHash signature-index builder — the entry that produces the
   * persistable signature artifact (graft.ops.MinHashIndex) a server then
   * serves via `--index-root` + the `index` arg on the `minhash_against`
@@ -23,13 +21,7 @@ object BuildMinhashIndex {
       sys.exit(2)
     }
     val Array(src, idCol, textCol, nhS, shS, out) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val corpus = spark.read.parquet(src)
     val art = graft.ops.MinHashIndex.buildAndSave(corpus, idCol, textCol,

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline vocabulary builder — the entry that produces the persistable
   * top-k token artifact (graft.ops.VocabIndex) a server then serves via
   * `--index-root` + the `index` arg on the `oov_rate` xop, and that the
@@ -24,13 +22,7 @@ object BuildVocabIndex {
     val src = args(0); val textCol = args(1)
     val k = args(2).toInt; val out = args(3)
     val capacity = args.lift(4).map(_.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(src)
     val art = graft.ops.VocabIndex.buildAndSave(docs, textCol, k, out, capacity)

@@ -1,20 +1,13 @@
 package graft.tools
 
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: formatted physical plans of headline queries, the
   * evidence trail for the scale-posture claims (pushdown, broadcast,
   * partial top-k, sort elision, codegen spans). */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 

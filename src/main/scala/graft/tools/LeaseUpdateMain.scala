@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM worker for the cross-process maintenance-lease test
   * (CrossProcessLeaseSpec): runs `n` vocabulary updates of one doc each
   * against an existing artifact at `path`, then exits 0. Each update is
@@ -18,12 +16,7 @@ object LeaseUpdateMain {
     val path = args(0)
     val idBase = args(1).toLong
     val n = args(2).toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local(2).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     try {

@@ -1,37 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench-methodology timing of a SUBSET of SparkEntry queries — the
-  * builder-side A/B instrument for JVM/session experiments (heap, GC,
-  * conf toggles) where the full 149-query bench is too slow to iterate:
-  * same session shape as [[graft.Bench]] (local[$SPARK_GRAFT_CPUS],
-  * shuffle=cpus, AQE on, SessionTuning confs), same warm registry, two
-  * untimed passes, three timed passes, per-query MIN. Prints one line
-  * per query plus the subset total. NOT a driver surface — the driver's
-  * number stays graft.Bench; this exists so experiments are measured
-  * with the bench's exact methodology before touching anything.
+  * A/B instrument for JVM/session experiments (heap, GC, conf toggles)
+  * where the full 149-query bench is too slow to iterate: the same
+  * session as [[graft.Bench]] ([[graft.engine.SessionTuning.local]]),
+  * same warm registry, two untimed passes, three timed passes,
+  * per-query MIN. Prints one line per query plus the subset total. NOT
+  * the headline number — that stays graft.Bench; this exists so
+  * experiments are measured with the bench's exact methodology before
+  * touching anything.
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.MiniBench x2_dedup_minhash x72_index_update"
+  *   sbt "runMain graft.tools.MiniBench x2_dedup_minhash x72_index_update"
   */
 object MiniBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // experiment overrides: SPARK_GRAFT_MINI_CONF="k=v;k=v" (applied
-    // last, so they beat the bench-shape defaults above)
-    val builder = sys.env.get("SPARK_GRAFT_MINI_CONF").toSeq
-      .flatMap(_.split(';')).map(_.split("=", 2))
-      .collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(builder0) { case (b, (k, v)) => b.config(k, v) }
-    val spark = graft.engine.SessionTuning.tuned(builder).getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val qmap = graft.SparkEntry.queries.toMap
     val names = if (args.nonEmpty) args.toSeq else qmap.keys.toSeq.sorted

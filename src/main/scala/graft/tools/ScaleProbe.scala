@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Beyond-oracle scale validation for the event-time family: runs the
@@ -41,30 +41,27 @@ import org.apache.spark.sql.functions._
   * `factor` is the EVENTS replica count R of the scaled dir — the
   * generator replicates events at 128*factor/10, so testdata-sf10 is
   * R=1280 and testdata-sf100 is R=12800 (1.28B events).
-  * Env:   SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_SHUFFLE (default 256),
-  *        SPARK_DRIVER_MEM via build.sbt fork options.
+  * Env:   SPARK_GRAFT_CPUS (default 4), SPARK_DRIVER_MEM via build.sbt
+  *        fork options, SPARK_LOCAL_DIRS for shuffle/spill scratch.
   */
 object ScaleProbe {
   import graft.streaming.EventStreams
+
+  /** Shuffle partitions for the replicated corpus, well above the core
+    * count so each reduce task's slice of a 10^8-10^9-row exchange stays
+    * small. Every SCALE_PROBE.json record ran at this value. */
+  val ShufflePartitions = 256
 
   def main(args: Array[String]): Unit = {
     val scaledDir = args(0)
     val factor = args(1).toLong
     val baseDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.engine.SessionTuning.local()
+      .config("spark.sql.shuffle.partitions", ShufflePartitions.toString)
       // zstd shuffle/spill compression: ~35% smaller than lz4 on these
       // rows — at 1.28B events the sessionize exchange + sort spill is
       // tens of GB and disk headroom, not CPU, is the binding constraint
       .config("spark.io.compression.codec", "zstd")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIR", "/tmp"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStreams
@@ -34,14 +34,7 @@ object SmokeStreamRestart {
     val periodSeconds = args.lift(4).map(_.toLong).getOrElse(86400L)
     val maxOffset = args.lift(5).map(_.toInt).getOrElse(30)
     require(restartAfter > 0 && restartAfter < chunks)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.engine.SessionTuning.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = java.nio.file.Files.createTempDirectory("smoke_restart")

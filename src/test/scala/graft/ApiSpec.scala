@@ -726,6 +726,30 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally probe.stop()
   }
 
+  test("store larger than the whole cache: 500, nothing evicted, resident data still served") {
+    val probe = new GraftServer(spark, 0)
+    probe.start()
+    try {
+      storeAt(probe, "probe")
+      val small = new GraftServer(spark, 0, maxCacheSize = probe.cache.size + 10)
+      small.start()
+      try {
+        assert(storeAt(small, "resident").statusCode() == 201)
+        val before = small.cache.size
+        // a CSV body is allocated at its byte length (reference: app.py:248)
+        val big = "foo,bar\n" + "1,aaa\n" * (small.cache.maxSize / 6 + 1).toInt
+        assert(big.length > small.cache.maxSize)
+        val r = send(req("/dataset/huge", small).POST(BodyPublishers.ofString(big))
+          .header("Content-Type", "text/csv").build())
+        assert(r.statusCode() == 500)
+        assert(r.body() == "Impossible to allocate")
+        assert(small.cache.count == 1 && small.cache.size == before)
+        assert(queryAt(small, "resident").statusCode() == 200)
+        assert(queryAt(small, "huge").statusCode() == 404)
+      } finally small.stop()
+    } finally probe.stop()
+  }
+
   test("age eviction: lazy TTL with injected clock") {
     @volatile var now = 1000000000L
     val ttl = new GraftServer(spark, 0, maxAge = 10, clock = () => now)

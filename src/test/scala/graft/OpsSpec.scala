@@ -143,7 +143,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("weighted pairing collapses duplication; sweep folds the expansion exactly") {
-    import spark.implicits._
     // expanded corpus: docs ∪ full copy ∪ evens copy. Note doc 2 is an
     // exact dup of doc 1 after normalization, so the classes are
     // {1,2,101,102,202} (mult 5), {3,103} (2), {4,104,204} (3), {5,105} (2)
@@ -254,7 +253,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("weighted embcos collapses duplicated vectors; sweep folds the expansion exactly") {
-    import spark.implicits._
     // vecs: 1=(1,0,0), 2=(0.9,0.1,0), 3=(0,1,0), 4=(1,0,0) — 1 and 4 are
     // IDENTICAL vectors under different ids, so they join ONE class
     val expanded = vecs
@@ -296,7 +294,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("auditPairsWeighted: the unweighted queue over the collapsed corpus, class sizes attached") {
-    import spark.implicits._
     val base = docs
     val expanded = base
       .unionByName(base.select((col("doc_id") + 100).as("doc_id"), col("text")))
@@ -2241,7 +2238,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("qualityRules: each rule fires on its crafted document") {
-    val good = ("good " * 30).trim // 30 tokens of 4 chars, but all dup...
     val docs = Seq(
       (1L, "the quick brown fox jumps over a lazy dog " * 3), // pass-ish
       (2L, "a b"),                                      // word_count (short)
@@ -2621,7 +2617,7 @@ class OpsSpec extends AnyFunSuite {
     assert(out.length == 18) // 9 windows x 2 types, empties filled in
     val a = out.filter(_._1 == "a").map(x => (x._2, x._3, x._4, x._5, x._6))
     // first 5 windows: no full trailing history → everything null, no flag
-    assert(a.take(5).forall { case (_, n, m, z, f) =>
+    assert(a.take(5).forall { case (_, _, m, z, f) =>
       m.isEmpty && z.isEmpty && !f })
     // minute 5: flat trailing line (2,2,2,2,2), n = 2 → nothing to flag
     assert(a(5) == (("05", 2L, Some(2.0), None, false)))

@@ -1,23 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks a single test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // tests run under the same shared library tuning the mains apply
-    // (committer v2 etc.): the artifact-race and restart suites must
-    // exercise the write path the library actually ships with
-    val s = graft.engine.SessionTuning.tuned(SparkSession.builder()
-      .master("local[4]")
+    // tests run under the library's session recipe (committer v2 etc.):
+    // the artifact-race and restart suites must exercise the write path
+    // the library actually ships with
+    val s = graft.engine.SessionTuning.local(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
